@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: per-query wall seconds at the SF dir from
   * SPARK_GRAFT_SF_DIR. Emits TWO artifacts (r09 verdict item 1): the
@@ -133,34 +132,8 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver fixtures carry naive µs timestamps: read as TIMESTAMP, not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // Cap driver status-store retention (guide §5: the driver should do
-      // almost no data work). Defaults keep the last 1000 SQL executions'
-      // PLAN STRINGS and 1000 jobs/stages of metrics in driver old-gen —
-      // and this suite's plans include the ADC literal-LUT projections
-      // (megabyte-scale plan text), so by the harness section the
-      // accumulated status store was GC-taxing exactly the gates that
-      // submit jobs concurrently: q86/q92 measured 18.7/16.4 s late in
-      // the full 152-query suite vs 10.2/10.1 s in a 30-query session
-      // (same code, same load). Nothing reads this state here — the UI
-      // is disabled; the caps are scale-independent session hygiene.
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      // bucketed-table gates (q88) saveAsTable; keep the warehouse out of
-      // the repo and isolated per run
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(defaultCpus = 32)
+    val cpus = spark.sparkContext.defaultParallelism
     // Materialize through the noop sink, not count(): count() lets
     // ColumnPruning delete projection-only work (md5/regex/scoring columns
     // that no downstream op reads), so q16/q17/q25-q28 measured scan+count
@@ -181,8 +154,14 @@ object Bench {
     val (harness, batch) = selected.partition(harnessBound)
     val names = batch ++ harness
     val warmDir = "/root/testdata/sf0.001"
+    // warm-up failures are recorded, not swallowed: one that happens only
+    // on the warm-up fixture would otherwise leave no trace in the artifacts
+    val warmupErrors = scala.collection.mutable.ListBuffer.empty[String]
     names.foreach { name =>
-      try { run(name, warmDir) } catch { case _: Throwable => () }
+      try run(name, warmDir) catch { case e: Throwable =>
+        warmupErrors += name
+        System.err.println(s"[bench] warm-up $name FAILED: ${e.getMessage}")
+      }
       spark.catalog.clearCache()
     }
     val failed = scala.collection.mutable.ListBuffer.empty[String]
@@ -239,14 +218,14 @@ object Bench {
       "\"" + k + "\":{\"reps\":[" + reps.map(f).mkString(",") +
         "],\"load\":" + f(load) + "}"
     }.mkString("{", ",", "}")
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jlist(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = jlist(failed.toSeq)
     val total = results.map(_._2).sum
     val byName = results.map(r => r._1 -> r._2).toMap
     val batchTotal = batch.map(byName).sum
     val harnessTotal = harness.map(byName).sum
     val branchGateTotal = selected.filter(branchGates).map(byName).sum
-    val branchGatesJson = selected.filter(branchGates)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val branchGatesJson = jlist(selected.filter(branchGates))
     val wall = (System.nanoTime() - t0Wall) / 1e9
     // sample end-of-run load BEFORE stop: the field means "load as the
     // last query finished", not "load after executor teardown"
@@ -266,30 +245,32 @@ object Bench {
     // parsed:null); the summary is a few hundred bytes and carries the
     // totals plus a pointer to the detail file.
     val detailJson =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","batch_total":${f(batchTotal)},"streaming_total":${f(harnessTotal)},"branch_gate_total":${f(branchGateTotal)},"branch_gates":$branchGatesJson,"settle_sec":${f(settleSec)},"queries":$qs,"errors":$errs,"sf":"${jstr(sfDir)}","load_start":${f(loadStart)},"load_end":${f(loadEnd)},"wall_sec":${f(wall)},"detail":$repsJson}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","batch_total":${f(batchTotal)},"streaming_total":${f(harnessTotal)},"branch_gate_total":${f(branchGateTotal)},"branch_gates":$branchGatesJson,"settle_sec":${f(settleSec)},"queries":$qs,"errors":$errs,"warmup_errors":${jlist(warmupErrors.toSeq)},"sf":"${jstr(sfDir)}","load_start":${f(loadStart)},"load_end":${f(loadEnd)},"wall_sec":${f(wall)},"detail":$repsJson}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "evidence/BENCH_detail_last.json")
+    def writeDetail(path: String): Unit = {
+      val p = java.nio.file.Paths.get(path)
+      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(p, (detailJson + "\n").getBytes("UTF-8"))
+    }
     val detailNote =
-      try {
-        val p = java.nio.file.Paths.get(detailPath)
-        Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.write(p, (detailJson + "\n").getBytes("UTF-8"))
-        // ALSO write a per-core-count copy (r13 verdict item 1): the
-        // driver benches at two core counts and both runs default to the
-        // same detail path, so the 8-core detail OVERWRITES the 32-core
-        // one and per-query core-scaling evidence is lost. The _c$cpus
-        // copy is additive — the legacy path keeps its meaning.
-        val pc = java.nio.file.Paths.get(
-          detailPath.replaceAll("\\.json$", "") + s"_c$cpus.json")
-        java.nio.file.Files.write(pc, (detailJson + "\n").getBytes("UTF-8"))
-        detailPath
-      } catch { case t: Throwable =>
+      try { writeDetail(detailPath); detailPath } catch { case t: Throwable =>
         // a failed file write must not lose the run: dump the detail to
         // stderr (kept out of the parsed stdout tail) and say so
         System.err.println(s"[bench] detail write to $detailPath failed: ${t.getMessage}")
         System.err.println(detailJson)
         s"WRITE FAILED ($detailPath): detail on stderr"
       }
+    // ALSO write a per-core-count copy (r13 verdict item 1): the bench
+    // runs at two core counts and both runs default to the same detail
+    // path, so the 8-core detail OVERWRITES the 32-core one and per-query
+    // core-scaling evidence is lost. The _c$cpus copy is additive — the
+    // legacy path keeps its meaning — so its own failure is reported on
+    // its own and never marks the primary file as failed.
+    val perCorePath = detailPath.replaceAll("\\.json$", "") + s"_c$cpus.json"
+    try writeDetail(perCorePath) catch { case t: Throwable =>
+      System.err.println(s"[bench] per-core detail write to $perCorePath failed: ${t.getMessage}")
+    }
     // Full driver-contract line (metric/value/unit/queries/sf), printed
     // BEFORE the compact summary (r13 verdict item 1: PERF is per-query
     // blind). It cannot REPLACE the summary: the driver parses a 2000-char
@@ -303,8 +284,7 @@ object Bench {
     // the summary's error list is CAPPED so a mass-failure run (every
     // query erroring → ~4.4 KB of names) cannot push the line back past
     // the driver's 2000-char tail — the full list is in the detail file
-    val errsCapped = (failed.take(8).map("\"" + _ + "\"") ++
-      (if (failed.size > 8) Seq("\"...\"") else Nil)).mkString("[", ",", "]")
+    val errsCapped = jlist(failed.take(8).toSeq ++ (if (failed.size > 8) Seq("...") else Nil))
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","sf":"${jstr(sfDir)}","n_queries":${results.size},"n_errors":${failed.size},"batch_total":${f(batchTotal)},"streaming_total":${f(harnessTotal)},"branch_gate_total":${f(branchGateTotal)},"branch_gates":$branchGatesJson,"settle_sec":${f(settleSec)},"wall_sec":${f(wall)},"load_start":${f(loadStart)},"load_end":${f(loadEnd)},"errors":$errsCapped,"detail_file":"${jstr(detailNote)}"}""")
   }
 }

@@ -107,11 +107,13 @@ object Similarity {
         posexplode(array((0 until numSeeds).map(s => col(s"__m$s")): _*)).as(Seq("seed", "minh")))
 
   /** (id, band, band_key) rows computed DIRECTLY from the wide per-id
-    * aggregate — one shuffle, where `bandKeys(minHashSignatures(...))`
-    * pays two (the signature groupBy, then the band re-groupBy of the
-    * exploded rows). The banding is a pure column slice of the wide row,
-    * so re-grouping what one aggregation already produced was machinery,
-    * not work (guide §2.4: remove shuffles outright). Output is
+    * aggregate, where `bandKeys(minHashSignatures(...))` explodes the
+    * signatures and re-aggregates them per (id, band). The banding is a
+    * pure column slice of the wide row, so re-grouping what one
+    * aggregation already produced was machinery, not work. This removes
+    * the (id, band) re-aggregation (q21's HashAggregate count 14 → 8),
+    * not an Exchange: the old re-grouping already rode the signature
+    * shuffle's id partitioning (Exchange count 8 → 8). Output is
     * bit-identical to the two-step form: same band numbering
     * (seed div rowsPerBand) and the same '_'-joined minima in seed order
     * (spec-pinned in OperatorsSpec).

@@ -113,10 +113,8 @@ object DailyUpdate {
     // so each table's content is byte-identical to the sequential form.
     // Pool size: enough in-flight jobs to fill the tail, few enough not
     // to thrash the scheduler (the guide's "2-3 is plenty" scaled to the
-    // many-tiny-stages shape); SPARK_GRAFT_PIPELINE_THREADS overrides.
-    val poolN = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_PIPELINE_THREADS", "8").toInt,
-      math.max(1, deriveStages.size)))
+    // many-tiny-stages shape): 8, or fewer when there are fewer stages.
+    val poolN = math.max(1, math.min(8, deriveStages.size))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)

@@ -305,7 +305,7 @@ object GateQueries {
       // the in-memory source; production sources (Kafka, files) stream
       // partition-wise. The fixture is capped at a FIXED doc count: the
       // gate proves the streaming semantics (batch equivalence, replay
-      // attribution), while per-batch scaling is q46/ScaleProbe territory
+      // attribution), while per-batch scaling is q46's and the sf1 bench's
       // — an uncapped MemoryStream gate would just re-measure minhash.
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -2085,8 +2085,8 @@ object GateQueries {
     * ≤ ~10k rows × ~128 B ≈ ≤ 2 MB per batch, which the derivation's
     * 64 MB/partition target floors at width 2. A deployment feeding real
     * volume passes its sustained per-batch bytes through the same
-    * derivation — or overrides directly with `SPARK_GRAFT_STREAM_PARTS` —
-    * so there is no fixture-tuned constant to forget (r13 verdict item 5).
+    * derivation, so there is no fixture-tuned constant to forget (r13
+    * verdict item 5).
     * Results are unchanged: the stateful ops process each key's rows in
     * explicitly sorted order, joins/aggregations are order-free sets, and
     * the dedup fixtures re-deliver exact copies / unique ids (q82/q98
@@ -2100,10 +2100,9 @@ object GateQueries {
       else name -> { (s: org.apache.spark.sql.SparkSession, d: String) =>
         val key = "spark.sql.shuffle.partitions"
         val prev = s.conf.get(key)
-        val width = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt)
-          .getOrElse(graft.streaming.StreamOps.statefulShuffleWidth(
-            perBatchBytes = gatePerBatchBytes,
-            sessionWidth = scala.util.Try(prev.toInt).getOrElse(200)))
+        val width = graft.streaming.StreamOps.statefulShuffleWidth(
+          perBatchBytes = gatePerBatchBytes,
+          sessionWidth = scala.util.Try(prev.toInt).getOrElse(200))
         s.conf.set(key, width.toString)
         try f(s, d) finally s.conf.set(key, prev)
       }

@@ -33,9 +33,12 @@ object StreamOps {
   def statefulShuffleWidth(perBatchBytes: Long, sessionWidth: Int,
                            targetPartitionBytes: Long = 64L << 20): Int = {
     require(targetPartitionBytes > 0, "targetPartitionBytes must be positive")
-    val fromVolume =
-      ((perBatchBytes + targetPartitionBytes - 1) / targetPartitionBytes).toInt
-    math.max(2, math.min(math.max(2, fromVolume), math.max(2, sessionWidth)))
+    require(perBatchBytes >= 0, "perBatchBytes must be non-negative")
+    // ceiling in Long without `+ target - 1` (overflows near Long.MaxValue),
+    // clamped to the session width before narrowing to Int
+    val fromVolume = perBatchBytes / targetPartitionBytes +
+      (if (perBatchBytes % targetPartitionBytes == 0) 0 else 1)
+    math.max(2L, math.min(fromVolume, sessionWidth.toLong)).toInt
   }
 
   /** Tumbling-window per-key counts/sums with a watermark bounding state:

@@ -59,6 +59,15 @@ class EntrySpec extends AnyFunSuite {
     assert(!escaped.exists(c => c < ' '), "control char leaked unescaped")
   }
 
+  test("SPARK_GRAFT_CPUS must be a positive integer, and the error names it") {
+    assert(SparkEntry.parseCpus(None, default = 32) == 32)
+    assert(SparkEntry.parseCpus(Some("8"), default = 32) == 8)
+    Seq("0", "-4", "eight", "", " 8", "8.0", "99999999999").foreach { bad =>
+      val e = intercept[IllegalArgumentException](SparkEntry.parseCpus(Some(bad), default = 32))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), s"'$bad': ${e.getMessage}")
+    }
+  }
+
   test("oracle SQL never references the absolute testdata paths") {
     // oracles run against DuckDB views the driver creates per sf dir; a
     // hardcoded path would silently pin one scale factor
