@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *  - per-date Python loops become partition-pruned incremental frames
   *    written with dynamic partition overwrite (one job per table, all
   *    dates at once — the cluster parallelizes over partitions);
-  *  - the derived chain is a DAG of declarative plans, so a scheduler can
-  *    run independent branches concurrently; ordering below mirrors the
-  *    reference's dependency order;
+  *  - no derived stage reads another's output, so the chain runs as
+  *    independent jobs overlapped by [[Overlap.run]]; the list below keeps
+  *    the reference's dependency order;
   *  - re-running a day is idempotent (overwrite of the same partitions),
   *    replacing the reference's delete+reload.
   */
@@ -86,7 +86,7 @@ object DailyUpdate {
     // 2. incremental fact load with partitioned layout
     val factPath = s"$outDir/fact_events_clean"
     val clean = stages.head._2(spark, sfDir).withColumn("d", to_date(col("ts")))
-    val existing = try Some(Formats.readParquet(spark, factPath)) catch { case _: Throwable => None }
+    val existing = Formats.readParquet(spark, factPath)
     // the prior facts' terminal ts, read ONCE before the append (one
     // bounded scalar action): it cuts the fact delta below AND the
     // raw-event delta the incremental first_acquisition stage consumes —
@@ -102,44 +102,23 @@ object DailyUpdate {
       case None => Formats.writePartitioned(clean, factPath, Seq("d"))
     }
 
-    // 3. derived chain. Every stage reads ONLY the source dir (or, for
-    // the incremental first_acquisition, its own prior-day state) and
-    // writes its own table — no stage consumes another's output — so the
-    // chain is a set of independent jobs, not a dependency chain. Run
-    // them from a small thread pool (guide §2.6: overlap independent
-    // jobs) so the next stage's tasks back-fill executors freed by the
-    // current stage's tail instead of the driver serializing ~25 small
-    // jobs; per-stage plans, writes and Observation counts are unchanged,
-    // so each table's content is byte-identical to the sequential form.
-    // Pool size: enough in-flight jobs to fill the tail, few enough not
-    // to thrash the scheduler (the guide's "2-3 is plenty" scaled to the
-    // many-tiny-stages shape): 8, or fewer when there are fewer stages.
-    val poolN = math.max(1, math.min(8, deriveStages.size))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val stageFutures = deriveStages.map { case (name, build) =>
-      scala.concurrent.Future {
-        spark.sparkContext.setJobDescription(s"daily_update: $name")
+    // 3. derived chain. No stage reads another's output (first_acquisition
+    // reads only its own prior state), so the stages are independent jobs,
+    // overlapped as [[Overlap]] describes.
+    val counts = Overlap.run(spark, "daily_update")(deriveStages.map { case (name, build) =>
+      name -> { () =>
         val obs = org.apache.spark.sql.Observation()
         val plan = observedPlan(spark, sfDir, name, build, existing.isDefined,
           prevTerminal, s"$outDir/$name").observe(obs, count(lit(1)).as("n"))
-        if (name == "first_acquisition")
-          // the incremental plan READS the live state table — write-then-
-          // swap (the upsertSink contract) so the snapshot is never
-          // truncated before its replacement is fully materialized
-          writeSwap(plan, s"$outDir/$name")
+        // the incremental plan READS the live state table, so it replaces
+        // it by write-then-swap
+        if (name == "first_acquisition") Formats.writeSnapshot(plan, s"$outDir/$name")
         else plan.write.mode("overwrite").parquet(s"$outDir/$name")
         name -> obs.get("n").asInstanceOf[Long]
       }
-    }
-    val counts =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(stageFutures),
-        scala.concurrent.duration.Duration.Inf).toMap
-      finally pool.shutdown()
+    }).toMap
 
-    counts + ("fact_events_clean" -> Formats.readParquet(spark, factPath).count()) +
+    counts + ("fact_events_clean" -> Formats.readParquet(spark, factPath).fold(0L)(_.count())) +
       ("date_gaps_found" -> gaps)
   }
 
@@ -164,44 +143,16 @@ object DailyUpdate {
                            prevTerminal: Option[java.sql.Timestamp],
                            target: String): DataFrame =
     if (name != "first_acquisition" || !factsExisted) build(spark, sfDir)
-    else {
-      val state = try Some(Formats.readParquet(spark, target)) catch { case _: Throwable => None }
-      state match {
-        case None => build(spark, sfDir) // state lost/corrupt → rebuild
-        case Some(st) =>
-          val deltaFirsts = graft.operators.Dedup.firstByKey(
-              Incremental.deltaAfter(Tables(spark, sfDir).events, "ts", prevTerminal),
-              Seq("user_id", "event_type"), "ts", "event_id")
-            .select(col("user_id"), col("event_type"),
-              col("event_id").as("first_event_id"), col("ts").as("first_ts"))
-          Incremental.firstTouchInsert(st, deltaFirsts, Seq("user_id", "event_type"))
-      }
+    else Formats.readParquet(spark, target) match {
+      case None => build(spark, sfDir) // no prior state → rebuild
+      case Some(st) =>
+        val deltaFirsts = graft.operators.Dedup.firstByKey(
+            Incremental.deltaAfter(Tables(spark, sfDir).events, "ts", prevTerminal),
+            Seq("user_id", "event_type"), "ts", "event_id")
+          .select(col("user_id"), col("event_type"),
+            col("event_id").as("first_event_id"), col("ts").as("first_ts"))
+        Incremental.firstTouchInsert(st, deltaFirsts, Seq("user_id", "event_type"))
     }
-
-  /** Write-then-swap (the streaming `upsertSink` contract, batch form):
-    * materialize the replacement fully at `target.tmp`, stage the live
-    * snapshot to `target.old`, promote — a crash between the renames
-    * leaves a complete `.old` the next run restores. Required for any
-    * stage whose plan READS its own live table (the incremental
-    * first_acquisition); harmless (one extra rename) elsewhere.
-    */
-  private def writeSwap(df: DataFrame, targetPath: String): Unit = {
-    val spark = df.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetPath)
-    val tmp = new org.apache.hadoop.fs.Path(targetPath + ".tmp")
-    val old = new org.apache.hadoop.fs.Path(targetPath + ".old")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a prior run died mid-swap (target staged to .old,
-    // tmp never promoted) — restore the full snapshot first
-    if (!fs.exists(target) && fs.exists(old))
-      require(fs.rename(old, target), s"failed to restore $old to $target")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true)
-    if (fs.exists(target))
-      require(fs.rename(target, old), s"failed to stage $target to $old")
-    require(fs.rename(tmp, target), s"failed to promote $tmp to $target")
-    fs.delete(old, true)
-  }
 
   /** Gap-driven backfill — the reference's `backfill.py`, which loops
     * `check_table_for_date_gaps` → per-date delete+reload. Spark form:
@@ -217,18 +168,12 @@ object DailyUpdate {
     // null dates can't name a partition: isin(null) never matches, so they
     // would be "missing" forever — drop them rather than NPE in the sort
     val expected = full.select(col(dateCol)).where(col(dateCol).isNotNull).distinct()
-    // ONLY path-not-found means "empty target". Any other read failure
-    // (corrupt footer, transient FS error) must abort: treating it as
-    // empty would dynamic-overwrite EVERY partition — exactly the rewrite
-    // of history this function promises never to do.
-    val present =
-      try spark.read.parquet(targetPath).select(col(dateCol)).distinct()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.toLowerCase.contains("path does not exist") =>
-          expected.limit(0)
-      }
+    // only a missing or data-less target means "empty target". Any other
+    // read failure (corrupt footer, transient FS error) propagates: treating
+    // it as empty would dynamic-overwrite EVERY partition — exactly the
+    // rewrite of history this function promises never to do.
+    val present = Formats.readParquet(spark, targetPath)
+      .fold(expected.limit(0))(_.select(col(dateCol)).distinct())
     // bounded: calendar days in the backfill horizon
     val missing = expected.except(present).collect().map(_.getDate(0)).toSeq.sortBy(_.getTime)
     if (missing.nonEmpty)

@@ -83,28 +83,20 @@ object GateQueries {
     val shared = root.resolve("shared")
     JFiles.createDirectories(shared)
     val ords = t.orders.where(col("o_custkey") < 150)
-    // the six fixture writes are independent of each other — submit them
-    // from a small pool (guide §2.6, the DailyUpdate.run stage move) so
-    // the capped-table scans overlap instead of serializing six small jobs
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val writes = Seq[() => Unit](
-        () => ev.where(col("ts") <= lit(split)).write.parquet(s"$day1/events.parquet"),
-        () => ev.write.parquet(s"$day2/events.parquet"),
-        () => t.customer.where(col("c_custkey") < 150)
-          .write.parquet(s"$shared/customer.parquet"),
-        () => ords.write.parquet(s"$shared/orders.parquet"),
-        () => t.lineitem.join(ords.select(col("o_orderkey")),
-            col("l_orderkey") === col("o_orderkey"), "left_semi")
-          .write.parquet(s"$shared/lineitem.parquet"),
-        () => t.documents.where(col("doc_id") < 500)
-          .write.parquet(s"$shared/documents.parquet"))
-      try Await.result(Future.sequence(writes.map(w => Future(w()))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    // the six fixture writes are independent jobs, overlapped as
+    // [[graft.pipeline.Overlap]] describes
+    graft.pipeline.Overlap.run(s, "daily fixture")(Seq(
+      "day1 events" -> (() => ev.where(col("ts") <= lit(split))
+        .write.parquet(s"$day1/events.parquet")),
+      "day2 events" -> (() => ev.write.parquet(s"$day2/events.parquet")),
+      "customer" -> (() => t.customer.where(col("c_custkey") < 150)
+        .write.parquet(s"$shared/customer.parquet")),
+      "orders" -> (() => ords.write.parquet(s"$shared/orders.parquet")),
+      "lineitem" -> (() => t.lineitem.join(ords.select(col("o_orderkey")),
+          col("l_orderkey") === col("o_orderkey"), "left_semi")
+        .write.parquet(s"$shared/lineitem.parquet")),
+      "documents" -> (() => t.documents.where(col("doc_id") < 500)
+        .write.parquet(s"$shared/documents.parquet"))))
     Seq("customer", "orders", "lineitem", "documents").foreach { n =>
       JFiles.createSymbolicLink(day1.resolve(s"$n.parquet"), shared.resolve(s"$n.parquet"))
       JFiles.createSymbolicLink(day2.resolve(s"$n.parquet"), shared.resolve(s"$n.parquet"))
@@ -2099,12 +2091,10 @@ object GateQueries {
       if (!streamingGates(name)) name -> f
       else name -> { (s: org.apache.spark.sql.SparkSession, d: String) =>
         val key = "spark.sql.shuffle.partitions"
-        val prev = s.conf.get(key)
         val width = graft.streaming.StreamOps.statefulShuffleWidth(
           perBatchBytes = gatePerBatchBytes,
-          sessionWidth = scala.util.Try(prev.toInt).getOrElse(200))
-        s.conf.set(key, width.toString)
-        try f(s, d) finally s.conf.set(key, prev)
+          sessionWidth = scala.util.Try(s.conf.get(key).toInt).getOrElse(200))
+        graft.streaming.StreamOps.withConf(s, key -> width.toString)(f(s, d))
       }
     }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink formats beyond the default parquet tables: CSV and JSON
@@ -41,8 +42,42 @@ object Formats {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The parquet table at `path`, or `None` when the path does not exist
+    * or holds no data file (what an aborted write leaves). First restores
+    * a snapshot a [[writeSnapshot]] stranded at `path.old`. Any other
+    * failure (a corrupt footer, an FS error) propagates.
+    */
+  def readParquet(spark: SparkSession, path: String): Option[DataFrame] = {
+    val (fs, target) = restoreStranded(spark, path)
+    if (!fs.exists(target)) None
+    else try Some(spark.read.parquet(path)) catch {
+      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+    }
+  }
+
+  /** Replaces the parquet snapshot at `path` by write-then-swap (write
+    * `path.tmp`, move the live one to `path.old`, promote, delete `.old`),
+    * so `df` may READ the snapshot it replaces. A crash between the renames
+    * leaves a complete `.old` that the next read or write restores.
+    */
+  def writeSnapshot(df: DataFrame, path: String): Unit = {
+    val (fs, target) = restoreStranded(df.sparkSession, path)
+    val (tmp, old) = (new Path(s"$path.tmp"), new Path(s"$path.old"))
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    fs.delete(old, true)
+    if (fs.exists(target)) require(fs.rename(target, old), s"failed to stage $target to $old")
+    require(fs.rename(tmp, target), s"failed to promote $tmp to $target")
+    fs.delete(old, true)
+  }
+
+  /** Moves a snapshot stranded at `path.old` back to a missing `path`. */
+  private def restoreStranded(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val (target, old) = (new Path(path), new Path(s"$path.old"))
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(target) && fs.exists(old))
+      require(fs.rename(old, target), s"failed to restore $old to $target")
+    (fs, target)
+  }
 
   /** Bucketed parquet table — the co-located-join layout for repeated big
     * joins on the same key (e.g. events⋈events, trades⋈ownership). Both

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -39,6 +39,18 @@ object StreamOps {
     val fromVolume = perBatchBytes / targetPartitionBytes +
       (if (perBatchBytes % targetPartitionBytes == 0) 0 else 1)
     math.max(2L, math.min(fromVolume, sessionWidth.toLong)).toInt
+  }
+
+  /** Runs `body` with the given session confs set, restoring each key's
+    * prior value (or unsetting it) afterwards, on success and failure. */
+  def withConf[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Tumbling-window per-key counts/sums with a watermark bounding state:
@@ -247,9 +259,9 @@ object StreamOps {
     * against the ACCUMULATED corpus via
     * [[graft.operators.Similarity.minHashNearDupsIncremental]] — the
     * streaming form of the daily-ingest dedup (q46). The sink maintains
-    * three stores under `storeDir`, all partitioned by batch_id and
-    * written with dynamic partition overwrite, so a replayed micro-batch
-    * rewrites exactly its own partitions (idempotent — foreachBatch
+    * three stores under `storeDir`, all partitioned by batch_id; each
+    * batch overwrites its own `batch_id=N` directories, so a replayed
+    * micro-batch rewrites exactly its own partitions (idempotent — foreachBatch
     * at-least-once becomes effectively-once):
     *   docs/  — accumulated (id, text), read back only for docs that
     *            land in a candidate pair
@@ -261,9 +273,10 @@ object StreamOps {
     * Replay safety: store reads filter to `batch_id < current` — a
     * replayed batch that already wrote its partitions before the
     * checkpoint commit failed must not see its own docs as "base"
-    * (shingle sets would double and jaccards corrupt). Store existence is
-    * probed through the Hadoop FileSystem of the path, so the sink works
-    * on hdfs:/s3a: as well as local disk.
+    * (shingle sets would double and jaccards corrupt). Stores are read
+    * through [[graft.sources.Formats.readParquet]], so the sink works on
+    * hdfs:/s3a: as well as local disk. A failed batch leaves no running
+    * write and no cached frame behind (see [[graft.pipeline.Overlap]]).
     */
   def nearDupSink(docs: DataFrame, idCol: String, textCol: String,
                   shingleN: Int, numSeeds: Int, rowsPerBand: Int,
@@ -288,9 +301,6 @@ object StreamOps {
         // tasks + tiny files). Re-enable AQE for the inner queries so
         // shuffle widths and output file counts track per-batch VOLUME
         // (advisory-size coalescing), at any scale, with no pinned width.
-        val aqeKey = "spark.sql.adaptive.enabled"
-        val aqePrev = spark.conf.get(aqeKey, "true")
-        spark.conf.set(aqeKey, "true")
         // The multi-consumer frames below are cached, and by default AQE
         // is skipped INSIDE cached-plan materialization
         // (canChangeCachedPlanOutputPartitioning=false), so the cached
@@ -298,67 +308,45 @@ object StreamOps {
         // every store file count regardless of the AQE re-enable
         // (measured: bands wrote 32 files per batch partition either
         // way). Scoped to this closure; results are partitioning-free.
-        val cacheAqeKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-        val cacheAqePrev = spark.conf.get(cacheAqeKey, "false")
-        spark.conf.set(cacheAqeKey, "true")
-        try {
-          val (docsPath, bandsPath, pairsPath) =
-            (s"$storeDir/docs", s"$storeDir/bands", s"$storeDir/pairs")
-          val b = batch.select(col(idCol), col(textCol)).cache()
-          val hPath = new org.apache.hadoop.fs.Path(docsPath)
-          val haveBase =
-            hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-          val base =
-            if (haveBase) spark.read.parquet(docsPath)
-              .where(col("batch_id") < batchId).select(col(idCol), col(textCol))
-            else b.limit(0)
-          val baseBands =
-            if (haveBase) Some(spark.read.parquet(bandsPath)
-              .where(col("batch_id") < batchId))
-            else None
-          // Incoming shingles and band keys are planned ONCE and shared
-          // between the pair search and the bands-store write (before
-          // r14 the store write re-built the same plan and relied on
-          // cache-plan matching to dodge recomputation).
-          val sh = Similarity.shingleSets(b, idCol, textCol, shingleN).cache()
-          val bands = Similarity.minHashBandKeys(sh, numSeeds, rowsPerBand).cache()
-          val pairs = Similarity.minHashNearDupsIncremental(base, b, idCol, textCol,
-            shingleN, numSeeds, rowsPerBand, baseBands = baseBands,
-            incomingShingles = Some(sh), incomingBands = Some(bands))
-          // The three store writes are independent of EACH OTHER (each
-          // dynamically overwrites only its own batch_id partition, and
-          // every read in this closure is pruned to batch_id < current,
-          // so no write's output is any concurrent job's input) — overlap
-          // them from a small pool (guide §2.6) instead of serializing
-          // three jobs whose tails leave the executors idle. Replay
-          // idempotence is per-write and order-free: a replayed batch
-          // rewrites exactly its own three partitions whichever order
-          // the originals landed in.
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val writes = Seq(
-            ("pairs", () => Formats.writePartitioned(
-              pairs.withColumn("batch_id", lit(batchId)), pairsPath, Seq("batch_id"))),
-            ("bands", () => Formats.writePartitioned(
-              bands.withColumn("batch_id", lit(batchId)), bandsPath, Seq("batch_id"))),
-            ("docs", () => Formats.writePartitioned(
-              b.withColumn("batch_id", lit(batchId)), docsPath, Seq("batch_id")))
-          ).map { case (which, w) =>
-            scala.concurrent.Future {
-              // job descriptions are thread-local: label each write
-              spark.sparkContext.setJobDescription(s"neardup sink b=$batchId: $which")
-              w()
-            }
-          }
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(writes),
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
-          sh.unpersist(); bands.unpersist(); b.unpersist()
-        } finally {
-          spark.conf.set(aqeKey, aqePrev)
-          spark.conf.set(cacheAqeKey, cacheAqePrev)
+        withConf(spark, "spark.sql.adaptive.enabled" -> "true",
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+          // every frame this batch caches, released on success and failure
+          val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+          def persist(df: DataFrame): DataFrame = { cached += df.cache(); df }
+          try {
+            val (docsPath, bandsPath, pairsPath) =
+              (s"$storeDir/docs", s"$storeDir/bands", s"$storeDir/pairs")
+            val b = persist(batch.select(col(idCol), col(textCol)))
+            // probed separately: a failed batch's replay may find one store only
+            val base = Formats.readParquet(spark, docsPath).fold(b.limit(0))(
+              _.where(col("batch_id") < batchId).select(col(idCol), col(textCol)))
+            val baseBands =
+              Formats.readParquet(spark, bandsPath).map(_.where(col("batch_id") < batchId))
+            // Incoming shingles and band keys are planned ONCE and shared
+            // between the pair search and the bands-store write (before
+            // r14 the store write re-built the same plan and relied on
+            // cache-plan matching to dodge recomputation).
+            val sh = persist(Similarity.shingleSets(b, idCol, textCol, shingleN))
+            val bands = persist(Similarity.minHashBandKeys(sh, numSeeds, rowsPerBand))
+            val pairs = Similarity.minHashNearDupsIncremental(base, b, idCol, textCol,
+              shingleN, numSeeds, rowsPerBand, baseBands = baseBands, persist = persist,
+              incomingShingles = Some(sh), incomingBands = Some(bands))
+            // The three store writes are independent of EACH OTHER (each
+            // replaces only its own batch_id partition, and every read in
+            // this closure is pruned to batch_id < current, so no write's
+            // output is any concurrent job's input). Replay idempotence is
+            // per-write and order-free. Each write targets its partition
+            // directory, not the store root: a write to a root re-plans every
+            // cached frame reading it (CacheManager.recacheByPath), here the
+            // candidates mid-use by the pairs write, and pins the discarded
+            // cache out of reach of `unpersist`. Overlap: [[graft.pipeline.Overlap]].
+            def write(df: DataFrame, store: String): Unit =
+              df.write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+            graft.pipeline.Overlap.run(spark, s"neardup sink b=$batchId")(Seq(
+              "pairs" -> (() => write(pairs, pairsPath)),
+              "bands" -> (() => write(bands, bandsPath)),
+              "docs" -> (() => write(b, docsPath))))
+          } finally cached.reverseIterator.foreach(_.unpersist())
         }
         ()
       }
@@ -377,17 +365,10 @@ object StreamOps {
     * `address_metadata`); fact-sized targets belong in
     * `Formats.writePartitioned` appends instead.
     *
-    * Filesystem contract: all probes/renames go through the Hadoop
-    * `FileSystem` resolved from `targetPath` (as `nearDupSink` does), so
-    * the sink works unchanged on hdfs:/s3a: paths, not just local disk.
-    *
-    * Crash safety of the swap: the swap sequence is
-    * `write tmp → (target → .old) → (tmp → target) → delete .old`. A
-    * crash between the two renames leaves no `target` but a complete
-    * `.old`; on the next batch the sink RESTORES `.old` to `target`
-    * before merging, so the replayed batch merges into the full prior
-    * snapshot rather than rebuilding from one batch (and `.old` is only
-    * deleted after `tmp → target` has succeeded).
+    * The snapshot is read and replaced through
+    * [[graft.sources.Formats.readParquet]] / [[graft.sources.Formats.writeSnapshot]]
+    * (write-then-swap): the replayed batch after a crash mid-swap merges
+    * into the full prior snapshot, on any Hadoop FileSystem.
     */
   def upsertSink(updates: DataFrame, targetPath: String, updateKey: String,
                  setCols: Map[String, String],
@@ -401,36 +382,16 @@ object StreamOps {
         // cloned session has it forced off; the outer source→foreachBatch
         // plan is structurally exempt either way) so the merge join and
         // snapshot write coalesce to the batch's volume — see nearDupSink
-        val aqeKey = "spark.sql.adaptive.enabled"
-        val aqePrev = spark.conf.get(aqeKey, "true")
-        spark.conf.set(aqeKey, "true")
-        try {
-        val target = new org.apache.hadoop.fs.Path(targetPath)
-        val tmp = new org.apache.hadoop.fs.Path(targetPath + ".tmp")
-        val old = new org.apache.hadoop.fs.Path(targetPath + ".old")
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // crash recovery: a prior run died mid-swap (target moved to .old,
-        // tmp not yet promoted) — restore the full snapshot first
-        if (!fs.exists(target) && fs.exists(old)) {
-          require(fs.rename(old, target), s"failed to restore $old to $target")
-        }
-        val merged =
-          if (!fs.exists(target))
-            batch.select(col(updateKey).as("id") +:
+        withConf(spark, "spark.sql.adaptive.enabled" -> "true") {
+          val merged = graft.sources.Formats.readParquet(spark, targetPath) match {
+            case None => batch.select(col(updateKey).as("id") +:
               setCols.toSeq.sortBy(_._1).map { case (t, s) => col(s).as(t) }: _*)
-          else graft.operators.Merge.coalesceMerge(
-              spark.read.parquet(targetPath), batch, "id", updateKey, setCols)
-            .drop("is_new", "updated")
-        // write-then-swap: the live snapshot is never truncated before the
-        // replacement is fully materialized
-        merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        fs.delete(old, true)
-        if (fs.exists(target)) {
-          require(fs.rename(target, old), s"failed to stage $target to $old")
+            case Some(snapshot) => graft.operators.Merge.coalesceMerge(
+                snapshot, batch, "id", updateKey, setCols)
+              .drop("is_new", "updated")
+          }
+          graft.sources.Formats.writeSnapshot(merged, targetPath)
         }
-        require(fs.rename(tmp, target), s"failed to promote $tmp to $target")
-        fs.delete(old, true)
-        } finally spark.conf.set(aqeKey, aqePrev)
         ()
       }
       .start()

@@ -437,16 +437,21 @@ class RegistrySweepSpec extends SparkSpec {
             .exists(_.toLowerCase.contains("bounded")) => i + 1
     }
 
-  test("every driver-side collect in main source states its bound within five lines") {
+  /** Every `.scala` file under `src/main/scala` with its lines, sorted by
+    * path — the walk the source audits share. */
+  private def mainSources: Seq[(java.nio.file.Path, IndexedSeq[String])] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"source root not found from ${java.nio.file.Paths.get("").toAbsolutePath} — " +
         "the audit must run from the repo root")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-    val offenders = files.flatMap { f =>
-      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      .map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+  }
+
+  test("every driver-side collect in main source states its bound within five lines") {
+    val offenders = mainSources.flatMap { case (f, lines) =>
       unboundedCollects(lines).map(n => s"$f:$n")
     }
     assert(offenders.isEmpty,
@@ -473,6 +478,39 @@ class RegistrySweepSpec extends SparkSpec {
       "val g = grads.collect()")
     assert(unboundedCollects(tooFar) == Seq(7),
       "audit accepted a bound note outside the five-line window")
+  }
+
+  /** The thread-pool audit: overlapped Spark jobs go through
+    * `graft.pipeline.Overlap`, the one place that cancels siblings on a
+    * failure. Returns the 1-based lines of `lines` that build a pool by
+    * hand. Pure function over source lines so the liveness test can feed
+    * it synthetic offenders.
+    */
+  private def handRolledPools(lines: IndexedSeq[String]): Seq[Int] =
+    lines.zipWithIndex.collect {
+      case (l, i) if Seq("Executors.new", "fromExecutorService", "newFixedThreadPool")
+          .exists(l.contains) => i + 1
+    }
+
+  test("no main source outside Overlap builds its own thread pool") {
+    val offenders = mainSources
+      .filterNot(_._1.getFileName.toString == "Overlap.scala")
+      .flatMap { case (f, lines) => handRolledPools(lines).map(n => s"$f:$n") }
+    assert(offenders.isEmpty,
+      s"hand-rolled thread pool: ${offenders.mkString(", ")} — overlap independent " +
+        "jobs with graft.pipeline.Overlap.run, which cancels the siblings on a failure")
+  }
+
+  test("the thread-pool audit flags a hand-rolled pool (screen is live)") {
+    val offender = IndexedSeq(
+      "val pool = java.util.concurrent.Executors.newFixedThreadPool(4)",
+      "implicit val ec: ExecutionContext =",
+      "  ExecutionContext.fromExecutorService(pool)",
+      "val one = Executors.newSingleThreadExecutor()")
+    assert(handRolledPools(offender) == Seq(1, 3, 4), "audit missed a hand-rolled pool")
+    assert(handRolledPools(IndexedSeq(
+      "graft.pipeline.Overlap.run(spark, \"writes\")(tasks)")).isEmpty,
+      "audit flagged an Overlap call")
   }
 
   test("the root-anchored bounded-build certificate rejects a deep-bounded big build (screen is live)") {

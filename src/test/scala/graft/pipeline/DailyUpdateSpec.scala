@@ -44,7 +44,12 @@ class DailyUpdateSpec extends SparkSpec {
     Seq((-999L, "__planted", -1L, split))
       .toDF("user_id", "event_type", "first_event_id", "first_ts")
       .write.mode("append").parquet(s"$out/first_acquisition")
+    // and leave the state where a swap that died between its renames
+    // leaves it: day 2 must restore it, not rebuild from scratch
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$out/first_acquisition"),
+      java.nio.file.Paths.get(s"$out/first_acquisition.old"))
     val r2 = DailyUpdate.run(spark, s"$root/day2", out, stage)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$out/first_acquisition.old")))
     val fin = spark.read.parquet(s"$out/first_acquisition")
     assert(fin.where(col("user_id") === -999L).count() == 1L,
       "planted state row erased — day 2 silently fell back to the rebuild")
@@ -58,6 +63,23 @@ class DailyUpdateSpec extends SparkSpec {
       .as[(Long, String, Long, java.sql.Timestamp)].collect().toSet
     assert(got == rebuilt, "incremental output diverged from the rebuild")
     assert(r2("first_acquisition") == rebuilt.size + 1L) // rebuild + sentinel
+  }
+
+  test("a corrupt first_acquisition state fails the run with its file named, instead of a silent rebuild") {
+    val sf = "/root/testdata/sf0.001"
+    val root = Files.createTempDirectory("graft-corrupt-state")
+    val out = s"$root/out"
+    val stage = DailyUpdate.stages.filter(_._1 == "first_acquisition")
+    assert(DailyUpdate.run(spark, sf, out, stage)("first_acquisition") > 0L)
+    // the state's only part file is garbage
+    val state = java.nio.file.Paths.get(s"$out/first_acquisition")
+    Files.list(state).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).foreach(Files.delete)
+    Files.write(state.resolve("part-00000-garbage.parquet"), "not parquet".getBytes)
+    val err = intercept[Exception](DailyUpdate.run(spark, sf, out, stage))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    assert(messages.contains("part-00000-garbage.parquet"), messages)
   }
 
   test("backfillDates recomputes only missing partitions, never present ones") {

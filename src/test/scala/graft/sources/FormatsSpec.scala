@@ -67,12 +67,30 @@ class FormatsSpec extends SparkSpec {
     val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
       .toDF("id", "day", "v")
     Formats.writePartitioned(df, s"$dir/t", Seq("day"))
-    val pruned = Formats.readParquet(spark, s"$dir/t").where(col("day") === "2024-01-01")
+    val pruned = Formats.readParquet(spark, s"$dir/t").get.where(col("day") === "2024-01-01")
     assert(pruned.select("id").as[Long].collect().toSeq == Seq(1L))
     // dynamic overwrite replaces only the touched partition
     Formats.writePartitioned(Seq((3L, "2024-01-02", 9.0)).toDF("id", "day", "v"), s"$dir/t", Seq("day"))
-    val all = Formats.readParquet(spark, s"$dir/t").select("id").as[Long].collect().sorted
+    val all = Formats.readParquet(spark, s"$dir/t").get.select("id").as[Long].collect().sorted
     assert(all.toSeq == Seq(1L, 3L))
+  }
+
+  test("writeSnapshot replaces a snapshot its own plan reads; readParquet is None only without a data file") {
+    val dir = Files.createTempDirectory("graft-snapshot")
+    assert(Formats.readParquet(spark, s"$dir/missing").isEmpty)
+    // what aborted writes leave: directories without a data file
+    Files.createDirectories(dir.resolve("aborted/.spark-staging-0"))
+    Files.createDirectories(dir.resolve("aborted/batch_id=0"))
+    Files.createFile(dir.resolve("aborted/_SUCCESS"))
+    assert(Formats.readParquet(spark, s"$dir/aborted").isEmpty)
+    // a corrupt file is not "no data"
+    Files.write(dir.resolve("aborted/batch_id=0/part-0.parquet"), "not parquet".getBytes)
+    intercept[Exception](Formats.readParquet(spark, s"$dir/aborted"))
+    val snap = s"$dir/snap"
+    Formats.writeSnapshot(Seq(1L, 2L).toDF("id"), snap)
+    Formats.writeSnapshot(Formats.readParquet(spark, snap).get.select((col("id") + 10).as("id")), snap)
+    assert(Formats.readParquet(spark, snap).get.as[Long].collect().toSet == Set(11L, 12L))
+    assert(!Files.exists(dir.resolve("snap.tmp")) && !Files.exists(dir.resolve("snap.old")))
   }
 
   test("bucketed tables join with no shuffle exchange") {

@@ -6,6 +6,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 class StreamOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -220,6 +222,91 @@ class StreamOpsSpec extends SparkSpec {
         .select("id").distinct().as[Long].collect().toSet
       assert(bandIds == Set(1L, 2L, 3L, 4L, 5L))
     } finally q.stop()
+  }
+
+  /** Three near-dup micro-batches: a cross-batch pair (1, 3), an
+    * intra-batch pair (4, 5) and a third batch that re-sees both. */
+  private val nearDupBatches = Seq(
+    Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten")),
+    Seq((3L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+      (4L, "red orange yellow green blue indigo violet black white gray"),
+      (5L, "red orange yellow green blue indigo violet black white silver")),
+    Seq((6L, "one two three four five six seven eight nine eleven"),
+      (7L, "red orange yellow green blue indigo violet black white gold")))
+
+  private def nearDupQuery(input: MemoryStream[(Long, String)], dir: String) =
+    StreamOps.nearDupSink(input.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      shingleN = 3, numSeeds = 12, rowsPerBand = 3,
+      storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")
+
+  private def storeRows(dir: String, store: String) =
+    spark.read.parquet(s"$dir/store/$store").collect().map(_.toSeq).toSet
+
+  test("nearDupSink releases every frame it caches, batch after batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardup-cache").toString
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val input = MemoryStream[(Long, String)]
+    val q = nearDupQuery(input, dir)
+    try nearDupBatches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    assert(storeRows(dir, "pairs").nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "a micro-batch left cached frames pinned")
+  }
+
+  test("a failed nearDupSink write leaves no running job or cache, and its replay matches a clean run") {
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val clean = java.nio.file.Files.createTempDirectory("graft-neardup-clean").toString
+    val cleanInput = MemoryStream[(Long, String)]
+    val cq = nearDupQuery(cleanInput, clean)
+    try nearDupBatches.foreach { b => cleanInput.addData(b: _*); cq.processAllAvailable() }
+    finally cq.stop()
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardup-fault")
+    // a regular file where the bands store belongs: batch 0's bands write
+    // fails. It is an empty parquet file with the store's schema, so the
+    // batch's read of the (empty) base bands still succeeds.
+    val blocker = dir.resolve("store/bands")
+    val emptyBands = s"$dir/empty-bands"
+    spark.read.parquet(s"$clean/store/bands").limit(0).write.parquet(emptyBands)
+    java.nio.file.Files.createDirectories(blocker.getParent)
+    java.nio.file.Files.copy(java.nio.file.Files.list(java.nio.file.Paths.get(emptyBands))
+      .filter(_.getFileName.toString.startsWith("part-")).findFirst().get, blocker)
+    val before = sc.getPersistentRDDs.size
+    val log = new graft.pipeline.JobLog
+    sc.addSparkListener(log)
+    val input = MemoryStream[(Long, String)]
+    try {
+      val q = nearDupQuery(input, dir.toString)
+      try {
+        input.addData(nearDupBatches.head: _*)
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      } finally q.stop()
+      // every job of the failed batch's writes has ended, and none starts later
+      log.drain(spark)
+      val failed = log.tagged("neardup sink b=0")
+      eventually(timeout(10.seconds), interval(20.millis))(assert(
+        failed.forall(log.ends.containsKey), "a sink write was still running after the query failed"))
+      Thread.sleep(1000)
+      log.drain(spark)
+      assert(log.tagged("neardup sink b=0") == failed, "a sink write started after the query failed")
+    } finally sc.removeSparkListener(log)
+    assert(sc.getPersistentRDDs.size == before, "the failed batch left cached frames pinned")
+
+    // replay batch 0 from the same checkpoint, then run the rest
+    java.nio.file.Files.delete(blocker)
+    val q2 = nearDupQuery(input, dir.toString)
+    try {
+      q2.processAllAvailable()
+      nearDupBatches.tail.foreach { b => input.addData(b: _*); q2.processAllAvailable() }
+    } finally q2.stop()
+    Seq("docs", "bands", "pairs").foreach { store =>
+      assert(storeRows(dir.toString, store) == storeRows(clean, store),
+        s"the replayed $store store differs from a clean run's")
+    }
   }
 
   test("left-outer interval join: null row only after the watermark proves no match") {
